@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .urltools import with_canonical_url
+
 # attribute JSON: everything CDXJ guarantees; numbers arrive as JSON
 # strings and are cast after parse (CC writes "status": "200")
 _ATTR_SCHEMA = (
@@ -77,7 +79,6 @@ def read_cdx(spark: SparkSession, path: str) -> DataFrame:
 
 def cdx_seeds(
     cdx: DataFrame,
-    canonicalize,
     mime_prefix: str = "text/html",
     statuses: tuple[int, ...] = (200,),
 ) -> DataFrame:
@@ -91,9 +92,9 @@ def cdx_seeds(
         & F.col("mime").startswith(mime_prefix)
         & F.col("url").isNotNull()
     )
-    canon = ok.withColumn("url", canonicalize(F.col("url")))
     return (
-        canon.groupBy("url")
+        with_canonical_url(ok)
+        .groupBy("url")
         .agg(
             F.max("warc_ts").alias("last_seen_ts"),
             F.count("*").alias("n_captures"),

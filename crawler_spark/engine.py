@@ -41,7 +41,7 @@ from .extract import (
 )
 from .politeness import politeness_take, robots_allowed
 from .statestore import StateStore
-from .urltools import canonicalize_expr, registrable_domain_udf
+from .urltools import registrable_domain_udf, with_canonical_url
 
 _CKPT_PARTS = 16  # lineage partition granularity (url-hash)
 
@@ -152,6 +152,42 @@ _FRONTIER_COLS = [
 
 def _ckpt_pid() -> F.Column:
     return F.pmod(F.xxhash64(F.col("url")), F.lit(_CKPT_PARTS)).cast("int")
+
+
+def union_successors(successors: list[DataFrame], n_parts: int) -> DataFrame:
+    """The successor frames as one frame of at most ``n_parts`` partitions:
+    each union input partition holds only KBs of successor URLs and every
+    task pays a fixed scheduling cost, so narrow-merge to the session's
+    parallelism (at production scale, the full cluster width). The merge
+    also keeps the canonicalizer above the union: one copy in the plan,
+    not one per branch."""
+    cols = ("url", "host", "path", "parent_url", "root_seed", "depth", "kind")
+    succ = successors[0].select(*cols)
+    for sdf in successors[1:]:
+        succ = succ.unionByName(sdf.select(*cols))
+    return succ.coalesce(n_parts)
+
+
+def first_wins(succ: DataFrame) -> DataFrame:
+    """One row per non-NULL ``url``: the successor with the minimum
+    ``path`` (oracle: sorted-(path, url) insertion), at ``depth + 1``.
+    NULL urls (canonicalize-rejected) are dropped by a filter on the
+    aggregate output: a filter on the grouping key would be pushed below
+    the aggregate and re-run the whole canonicalizer inside it."""
+    m = F.struct("path", "host", "parent_url", "root_seed", "depth")
+    return (
+        succ.groupBy("url")
+        .agg(F.min(F.when(F.col("url").isNotNull(), m)).alias("m"))
+        .filter(F.col("m").isNotNull())
+        .select(
+            "url",
+            F.col("m.host").alias("host"),
+            F.col("m.path").alias("path"),
+            F.col("m.parent_url").alias("parent_url"),
+            F.col("m.root_seed").alias("root_seed"),
+            (F.col("m.depth") + 1).alias("depth"),
+        )
+    )
 
 
 class CrawlEngine:
@@ -338,7 +374,7 @@ class CrawlEngine:
         cfg = self.cfg
         seeds = self.spark.read.schema(schemas.SEEDS).parquet(self.seeds_path)
         f = (
-            seeds.withColumn("url", canonicalize_expr(F.col("url")))
+            with_canonical_url(seeds)
             .filter(F.col("url").isNotNull())
             .withColumn("host", registrable_domain_udf(F.col("url")))
             .withColumn("path", F.format_string("%010d", F.col("seed_order")))
@@ -1159,34 +1195,12 @@ class CrawlEngine:
         w0 = time.monotonic()
         cfg = self.cfg
         self._jd(f"s{s}:succ_dedup")
-        _cols = ("url", "host", "path", "parent_url", "root_seed", "depth",
-                 "kind")
-        succ = successors[0].select(*_cols)
-        for sdf in successors[1:]:
-            succ = succ.unionByName(sdf.select(*_cols))
-        # Task-count discipline: the union inherits one partition per
-        # parent partition per frame (3 frames × every corpus-scan
-        # split), but each partition holds only KBs of successor URLs.
-        # A Python-UDF stage pays a fixed per-task worker round-trip
-        # (~0.3 s/node) that dwarfs the per-row work at that width —
-        # narrow-merge down to the session's parallelism before the
-        # canonicalize/probe chain. (At production scale
-        # defaultParallelism is the full cluster width, so this never
-        # caps real parallelism.)
-        succ = succ.coalesce(self.spark.sparkContext.defaultParallelism)
+        succ = union_successors(
+            successors, self.spark.sparkContext.defaultParallelism
+        )
         if cfg.canonicalize_successors:
-            # pure-Catalyst canonicalizer (urltools.canonicalize_expr):
-            # stays inside the JVM — no Python-worker round trip in the
-            # per-superstep hot path (round-2 event logs put the pandas
-            # UDF predecessor among the largest non-extract stages).
-            # The unparseable-URL drop happens AFTER the first-wins agg
-            # below (r5 barrier profile): an IS NOT NULL filter here is
-            # pushed below the projection, inlining the entire
-            # canonicalize tree into the filter CONDITION — every
-            # successor row paid the chain twice (plan audit, exec 135
-            # stage 566). Post-agg, the filter reads the materialized
-            # grouping key; null urls just form one dropped group.
-            succ = succ.withColumn("url", canonicalize_expr(F.col("url")))
+            # rejected urls come out NULL; first_wins drops them
+            succ = with_canonical_url(succ)
         if cfg.record_links:
             # every discovered edge, canonical dst, BEFORE the
             # first-wins dedup below collapses multi-parent urls to one
@@ -1200,38 +1214,10 @@ class CrawlEngine:
                 "kind",
                 F.lit(s).cast("long").alias("superstep"),
             ).where(F.col("dst_url").isNotNull())
-        # first-wins on priority path per url (oracle: sorted-(path,url)
-        # insertion; min(struct) = lexicographic min on path); the
-        # post-agg IS NOT NULL drops the canonicalize-rejected group
-        # against the materialized key (see canonicalize note above)
-        succ = (
-            succ.groupBy("url")
-            .agg(
-                F.min(
-                    F.struct("path", "host", "parent_url", "root_seed", "depth")
-                ).alias("m")
-            )
-            .filter(F.col("url").isNotNull())
-            .select(
-                "url",
-                F.col("m.host").alias("host"),
-                F.col("m.path").alias("path"),
-                F.col("m.parent_url").alias("parent_url"),
-                F.col("m.root_seed").alias("root_seed"),
-                (F.col("m.depth") + 1).alias("depth"),
-            )
-        )
+        succ = first_wins(succ)
         succ = robots_allowed(
             succ, self.robots, rules_col=self._robots_rules_col
         )
-
-        if os.environ.get("CRAWL_PROF_SPLIT"):
-            # profiling only (extra action; re-runs the pre-probe chain):
-            # attribute the succ materialize between the relational chain
-            # and the probe/checkpoint tail
-            tp = time.monotonic()
-            ph["nfr_pre_probe_count"] = succ.count()
-            ph["nfr_pre_probe"] = round(time.monotonic() - tp, 3)
 
         # bloom prefilter: definite-new rows skip the exact anti-join
         succ = self._probe_maybe_seen(succ)

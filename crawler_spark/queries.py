@@ -1482,17 +1482,30 @@ FROM documents
 # unconditionally.
 
 
+# the CORRECTNESS_r*.json reports sit at the repository root
+_REPORT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def _last_green_round() -> dict[str, int]:
     """key → index of the most recent CORRECTNESS_r*.json report with a
-    fully green row (rows+schema+hash) for that key; absent = never."""
+    fully green row (rows+schema+hash) for that key; absent = never.
+    Warns when no report is found (e.g. the package runs outside the
+    checkout): the ordering then degrades to registration order."""
     import glob
     import json
+    import warnings
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    reports = sorted(
+        glob.glob(os.path.join(_REPORT_ROOT, "CORRECTNESS_r*.json"))
+    )
+    if not reports:
+        warnings.warn(
+            f"no CORRECTNESS_r*.json report under {_REPORT_ROOT!r}: "
+            "all_queries() falls back to registration order",
+            stacklevel=3,
+        )
     last: dict[str, int] = {}
-    for rnd, path in enumerate(
-        sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))), 1
-    ):
+    for rnd, path in enumerate(reports, 1):
         try:
             with open(path) as f:
                 rows = json.load(f)

@@ -2,7 +2,7 @@
 
 Local mode is a stand-in for a multi-executor cluster: shuffle
 partitions sized to cores, AQE on (runtime coalesce + skew splitting),
-Arrow enabled for the few pandas UDFs (URL canonicalization, bloom
+Arrow enabled for the few pandas UDFs (registrable domain, bloom
 build/probe, category-tree walk). Everything else in the engine is
 JVM-side Catalyst expressions.
 """
@@ -23,7 +23,7 @@ _DEFAULTS = {
     "spark.sql.parquet.compression.codec": "snappy",
     "spark.ui.enabled": "false",
     # Python-worker pooling: a superstep runs several concurrent UDF
-    # stages (canonicalize, bloom probe, sign builders); each
+    # stages (bloom probe, sign builders); each
     # ArrowEvalPython node × task asks the factory for a worker. With
     # the default pool sizing (Spark 4.1) workers are not retained
     # between stages, so every stage pays a fork + pyspark-import storm

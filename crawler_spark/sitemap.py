@@ -89,11 +89,10 @@ def sitemap_seeds(parsed: DataFrame, robots: DataFrame | None = None):
     First-wins on the highest advertised priority per URL (single
     groupBy shuffle on url — same discipline as the successor chain)."""
     from .politeness import robots_allowed
-    from .urltools import canonicalize_expr, registrable_domain_udf
+    from .urltools import registrable_domain_udf, with_canonical_url
 
     seeds = (
-        parsed.filter(F.col("kind") == "urlset")
-        .withColumn("url", canonicalize_expr(F.col("loc")))
+        with_canonical_url(parsed.filter(F.col("kind") == "urlset"), "loc")
         .filter(F.col("url").isNotNull())
         .groupBy("url")
         .agg(F.max(F.coalesce("priority", F.lit(0.5))).alias("priority"))

@@ -10,8 +10,10 @@ Canonicalization contract (BASELINE.json north_star): lowercase host,
 strip fragment, normalize path (dot-segments, duplicate slashes), drop
 default ports, keep query as-is. Idempotent (property-tested).
 
-All per-row logic is exposed both as plain Python (for the oracle) and as
-vectorized pandas UDFs (for the engine) — no per-row Python inside Spark.
+Canonicalization exists twice: as plain Python (``canonicalize_url``, the
+oracle) and as pure Catalyst expressions (``with_canonical_url``, the
+engine) — no per-row Python inside Spark for it. Only the registrable
+domain still runs as a pandas UDF (``registrable_domain_udf``).
 """
 
 from __future__ import annotations
@@ -20,6 +22,7 @@ import posixpath
 from urllib.parse import urljoin, urlsplit, urlunsplit
 
 import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -129,11 +132,12 @@ _C0_SP = "\\x00-\\x20"
 _DEFAULT_PORT_MAP = "map('http','80','https','443','ftp','21')"
 
 
-def canonicalize_expr(col, once: bool = True):
-    """`canonicalize_url` as a pure Catalyst Column (no Python workers).
+def with_canonical_url(df: DataFrame, src: str = "url", dst: str = "url"):
+    """``df`` with column ``dst`` = ``canonicalize_url(src)`` (base=None),
+    in pure Catalyst expressions (no Python workers).
 
-    Byte-identical to :func:`canonicalize_url` (base=None) — verified by
-    a corpus-equality test plus a hypothesis battery over adversarial
+    Byte-identical to :func:`canonicalize_url` — verified by a
+    corpus-equality test plus a hypothesis battery over adversarial
     inputs (tests/test_canonicalize_expr.py). Replicates CPython
     urlsplit's observable quirks in order:
 
@@ -157,42 +161,64 @@ def canonicalize_expr(col, once: bool = True):
     7. query kept verbatim (first ``?`` after fragment strip at first
        ``#``), fragment dropped.
 
-    The expression is wrapped nondeterministic for the same reason as
-    canonicalize_once_udf: it pins one evaluation per row so the
-    IS NOT NULL gate above it is not pushed below the successor union.
+    Rejected inputs give NULL. Each intermediate (trimmed url, scheme,
+    rest, netloc, hostinfo, host, port, path, query) is projected once
+    as its own column: every one of them feeds several later
+    expressions, and a single nested Column would re-evaluate it at
+    each reference. The projections stay separate because Catalyst does
+    not collapse a projection whose non-trivial output is referenced
+    more than once. A filter on ``dst`` is pushed below the projections
+    and re-evaluates the whole chain inside its condition, so the hot
+    path drops NULL rows after an aggregate instead
+    (``engine.first_wins``).
     """
-    u = F.regexp_replace(col, f"^[{_PY_WS}]+|[{_PY_WS}]+$", "")
+    staged: list[str] = []
+
+    def stage(**exprs):
+        """Project ``exprs`` as columns; return references to them."""
+        nonlocal df
+        names = [f"_canon_{n}" for n in exprs]
+        df = df.withColumns(dict(zip(names, exprs.values())))
+        staged.extend(names)
+        return [F.col(n) for n in names]
+
+    u = F.regexp_replace(F.col(src), f"^[{_PY_WS}]+|[{_PY_WS}]+$", "")
     u = F.regexp_replace(u, f"^[{_C0_SP}]+", "")
-    u = F.translate(u, "\t\n\r", "")
+    (u,) = stage(u=F.translate(u, "\t\n\r", ""))
 
-    scheme = F.lower(
-        F.regexp_extract(u, "^([A-Za-z][A-Za-z0-9+.\\-]*)://", 1)
+    scheme, rest = stage(
+        scheme=F.lower(
+            F.regexp_extract(u, "^([A-Za-z][A-Za-z0-9+.\\-]*)://", 1)
+        ),
+        rest=F.regexp_extract(u, "(?s)^[A-Za-z][A-Za-z0-9+.\\-]*://(.*)$", 1),
     )
-    rest = F.regexp_extract(u, "(?s)^[A-Za-z][A-Za-z0-9+.\\-]*://(.*)$", 1)
-    netloc = F.regexp_extract(rest, "^([^/?#]*)", 1)
+    (netloc,) = stage(netloc=F.regexp_extract(rest, "^([^/?#]*)", 1))
     after = rest.substr(F.length(netloc) + F.lit(1), F.length(rest))
-
-    hostinfo = F.element_at(F.split(netloc, "@", -1), -1)
-    host = F.regexp_replace(
-        F.lower(F.substring_index(hostinfo, ":", 1)), "\\.+$", ""
+    hostinfo, pre = stage(
+        hostinfo=F.element_at(F.split(netloc, "@", -1), -1),
+        pre=F.substring_index(after, "#", 1),
     )
-    port_str = F.regexp_extract(hostinfo, "(?s)^[^:]*:(.*)$", 1)
+    path_raw = F.substring_index(pre, "?", 1)
+    host, port_str, path, query = stage(
+        host=F.regexp_replace(
+            F.lower(F.substring_index(hostinfo, ":", 1)), "\\.+$", ""
+        ),
+        port=F.regexp_extract(hostinfo, "(?s)^[^:]*:(.*)$", 1),
+        path=F.when(path_raw == "", F.lit("/")).otherwise(path_raw),
+        query=F.regexp_extract(pre, "(?s)^[^?]*\\?(.*)$", 1),
+    )
+
     port_bad = (port_str != "") & (
         ~port_str.rlike("^[0-9]+$")
-        | (port_str.cast("long") > F.lit(65535))
+        | (port_str.try_cast("long") > F.lit(65535))
     )
-    port_int = F.when(port_str.rlike("^[0-9]+$"), port_str.cast("long"))
+    port_int = F.when(port_str.rlike("^[0-9]+$"), port_str.try_cast("long"))
     default_port = F.element_at(F.expr(_DEFAULT_PORT_MAP), scheme)
     netloc_out = F.when(
         port_int.isNotNull()
         & (port_int.cast("string") != default_port),
         F.concat(host, F.lit(":"), port_int.cast("string")),
     ).otherwise(host)
-
-    pre = F.substring_index(after, "#", 1)
-    query = F.regexp_extract(pre, "(?s)^[^?]*\\?(.*)$", 1)
-    path_raw = F.substring_index(pre, "?", 1)
-    path = F.when(path_raw == "", F.lit("/")).otherwise(path_raw)
 
     trailing = path.endswith("/") & (path != "/")
     needs_fold = path.rlike("//|(^|/)\\.\\.?(/|$)")
@@ -231,43 +257,12 @@ def canonicalize_expr(col, once: bool = True):
         & (host != "")
         & ~port_bad
     )
-    out = F.when(ok, assembled)
-    if once:
-        # Pin ONE evaluation per row, same rationale as
-        # canonicalize_once_udf: a vacuously-true rand() guard makes the
-        # tree nondeterministic, so Catalyst neither pushes the caller's
-        # IS NOT NULL gate below the successor union (re-evaluating the
-        # chain per branch) nor collapses it into downstream projects.
-        out = F.when(F.rand(seed=0) > F.lit(-1.0), out)
-    return out
+    return df.withColumn(dst, F.when(ok, assembled)).drop(*staged)
 
 
 # ---------------------------------------------------------------------------
-# Vectorized pandas UDFs (Arrow-batched; the engine's hot path)
+# Vectorized pandas UDF (Arrow-batched)
 # ---------------------------------------------------------------------------
-@F.pandas_udf(T.StringType())
-def canonicalize_udf(urls: pd.Series) -> pd.Series:  # pragma: no cover - spark
-    return urls.map(lambda u: canonicalize_url(u) if u is not None else None)
-
-
-# The function IS deterministic; the marker only withholds the
-# optimizer freedoms that hurt here: with a deterministic UDF, the
-# `url IS NOT NULL` gate above it is pushed below the projection and
-# into every union branch, so each successor row is canonicalized
-# TWICE (event-log audit, exec 99: ArrowEvalPython per branch + again
-# post-union). Nondeterministic marking pins one evaluation per row.
-canonicalize_once_udf = canonicalize_udf.asNondeterministic()
-
-
-@F.pandas_udf(T.StringType())
-def canonicalize_with_base_udf(
-    urls: pd.Series, bases: pd.Series
-) -> pd.Series:  # pragma: no cover - spark
-    return pd.Series(
-        [canonicalize_url(u, b) if u is not None else None for u, b in zip(urls, bases)]
-    )
-
-
 @F.pandas_udf(T.StringType())
 def registrable_domain_udf(hosts: pd.Series) -> pd.Series:  # pragma: no cover
     return hosts.map(lambda h: registrable_domain(h) if h is not None else None)

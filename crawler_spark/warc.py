@@ -309,7 +309,10 @@ def documents_from_wet(
     from pyspark.sql import functions as F
 
     recs = read_warc(spark, path, record_types=("conversion",))
-    text = F.decode(F.col("html"), "UTF-8")
+    # lenient: invalid UTF-8 becomes U+FFFD (what bytes.decode(errors=
+    # 'replace') gives) — F.decode raises on it under ANSI mode and
+    # would fail the whole job on one bad record
+    text = F.make_valid_utf8(F.col("html").cast("string"))
     return recs.select(
         F.pmod(
             F.xxhash64(F.col("url"), F.col("warc_ts").cast("string")),

@@ -1,7 +1,7 @@
-"""canonicalize_expr (pure Catalyst) ≡ canonicalize_url (Python oracle).
+"""with_canonical_url (pure Catalyst) ≡ canonicalize_url (Python oracle).
 
-The Catalyst expression replaced the pandas-UDF canonicalizer in the
-per-superstep hot path (engine._new_frontier_rows); the crawl-ordering
+The Catalyst canonicalizer runs in the per-superstep hot path
+(engine._new_frontier_rows); the crawl-ordering
 and URL-seen contracts require the two to agree byte-for-byte, so this
 is an exhaustive equality battery: hand-built urlsplit quirk cases, a
 seeded adversarial fuzz pool, and every link the golden corpus emits.
@@ -14,7 +14,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from crawler_spark.urltools import canonicalize_expr, canonicalize_url
+from crawler_spark.urltools import canonicalize_url, with_canonical_url
 
 HAND_CASES = [
     # scheme / gate
@@ -40,6 +40,7 @@ HAND_CASES = [
     "http://h:abc/p", "http://h:99999/p", "http://h:65535/p",
     "http://h:65536/p", "http://h:8080:90/p", "http://h:+80/p",
     "http://h: 80/p", "http://h:-1/p", "http://u:p@h:3128/x",
+    "http://h:99999999999999999999/p", "http://h:0000000000000000000080/p",
     # IPv6 / brackets (both sides must reject)
     "http://[::1]/p", "http://[::1]:80/p", "http://[::1/p", "http://::1]/p",
     "http://h]z/p", "http://[notv6]/p",
@@ -108,9 +109,7 @@ def _assert_parity(spark, urls: list[str | None]) -> None:
     )
     got = {
         r["i"]: r["c"]
-        for r in df.select(
-            "i", canonicalize_expr(F.col("url")).alias("c")
-        ).collect()
+        for r in with_canonical_url(df, "url", "c").select("i", "c").collect()
     }
     bad = []
     for i, u in enumerate(urls):
@@ -132,11 +131,7 @@ def test_idempotent_on_expr_output(spark):
     """expr(expr(u)) == expr(u): canonical forms are fixed points."""
     urls = [u for u in HAND_CASES if u] + _fuzz_pool(1500, seed=7)
     df = spark.createDataFrame([(u,) for u in urls], "url string")
-    two = df.select(
-        canonicalize_expr(F.col("url")).alias("c1")
-    ).select(
-        "c1", canonicalize_expr(F.col("c1")).alias("c2")
-    )
+    two = with_canonical_url(with_canonical_url(df, "url", "c1"), "c1", "c2")
     diverged = two.filter(
         F.col("c1").isNotNull() & (F.col("c1") != F.col("c2"))
     ).collect()

@@ -5,7 +5,6 @@ from __future__ import annotations
 import datetime as dt
 
 from crawler_spark.cdx import cdx_seeds, read_cdx
-from crawler_spark.urltools import canonicalize_expr
 
 LINES = [
     # two captures of the same page (same canonical url) — seeds keep
@@ -59,10 +58,7 @@ def test_read_cdx_parses_all_jvm(spark, tmp_path):
 
 def test_cdx_seeds_latest_capture_per_canonical_url(spark, tmp_path):
     cdx = read_cdx(spark, _write(tmp_path))
-    seeds = {
-        r.url: r
-        for r in cdx_seeds(cdx, canonicalize_expr).collect()
-    }
+    seeds = {r.url: r for r in cdx_seeds(cdx).collect()}
     # /a canonicalizes both captures (host lowercased, fragment dropped)
     # to one seed carrying the later ts and both captures counted
     assert set(seeds) == {"https://example.org/a", "https://example.org/b"}

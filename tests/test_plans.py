@@ -188,22 +188,52 @@ def test_stratified_sample_is_map_side_only(spark):
         assert op not in plan, f"unexpected {op} in\n{plan}"
 
 
-def test_canonicalize_chain_has_no_python_eval(spark):
-    """Round-2: successor canonicalization is a pure Catalyst expression
-    (urltools.canonicalize_expr) — the per-superstep hot path must not
-    contain an Arrow/Python eval node for it (the bloom probe is the
-    engine's one remaining Arrow stage, and it is not in this chain)."""
-    from crawler_spark.urltools import canonicalize_expr
+def _plan_nodes(node):
+    yield node
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
 
-    df = spark.createDataFrame(
-        [("HTTP://H.Example.COM:80/a/../b//c#f",), (None,)], "url: string"
+
+def test_canonicalize_chain_has_no_python_eval(spark):
+    """Successor canonicalization → first-wins, built the way
+    engine._new_frontier_rows builds it over a union of successor
+    branches, is pure Catalyst (no Arrow/Python eval node; the bloom
+    probe is the engine's one remaining Arrow stage, and it is not in
+    this chain) and canonicalizes each row once: the scheme regex
+    appears exactly once in the optimized plan and in no Filter. A
+    NULL-url predicate pushed below the aggregate would re-inline the
+    canonicalizer into every branch's filter condition."""
+    from crawler_spark.engine import first_wins, union_successors
+    from crawler_spark.urltools import with_canonical_url
+
+    cols = ("url string, host string, path string, parent_url string, "
+            "root_seed string, depth int, kind string")
+    detail = spark.createDataFrame(
+        [("HTTP://H.Example.COM:80/a/../b//c#f", "h", "2", "p", "r", 0, "d"),
+         (None, "h", "0", "p", "r", 0, "d")],
+        cols,
     )
-    q = df.select(canonicalize_expr(F.col("url")).alias("url")).filter(
-        F.col("url").isNotNull()
+    listing = spark.createDataFrame(
+        [("http://h.example.com/b/c", "h", "1", "q", "r", 1, "l"),
+         ("mailto:a@b", "h", "0", "q", "r", 1, "l")],
+        cols,
     )
+    q = first_wins(with_canonical_url(union_successors([detail, listing], 2)))
     plan = _plan(q)
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
-    assert q.count() == 1
+
+    optimized = q._jdf.queryExecution().optimizedPlan()
+    scheme_re = "^([A-Za-z][A-Za-z0-9+.\\-]*)://"
+    nodes = list(_plan_nodes(optimized))
+    text = "\n".join(n.simpleString(10_000) for n in nodes)
+    assert text.count(scheme_re) == 1, text
+    filters = [n.condition().toString() for n in nodes
+               if n.nodeName() == "Filter"]
+    assert not any(scheme_re in f for f in filters), filters
+
+    rows = [tuple(r) for r in q.collect()]
+    assert rows == [("http://h.example.com/b/c", "h", "1", "q", "r", 2)], rows
 
 
 def test_unigram_logprob_vocab_broadcasts(spark):

@@ -122,6 +122,18 @@ def test_rows_only_queries_run(spark):
             assert df.count() >= 0, name
 
 
+def test_all_queries_warns_without_reports(monkeypatch, tmp_path):
+    """With no CORRECTNESS report to read, the stalest-green-first
+    ordering cannot be computed: all_queries() says so and keeps
+    registration order."""
+    from crawler_spark import queries
+
+    monkeypatch.setattr(queries, "_REPORT_ROOT", str(tmp_path))
+    with pytest.warns(UserWarning, match="CORRECTNESS_r"):
+        ordered = list(queries.all_queries())
+    assert ordered == list({**queries._REL, **queries._TRAIN})
+
+
 def test_driver_window_covers_unverified():
     """The round driver oracle-checks only the first 50 registered
     queries() entries, so registration order is an exposure budget:

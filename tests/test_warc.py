@@ -283,9 +283,12 @@ def test_documents_from_wet(spark, tmp_path):
     records ignored."""
     from crawler_spark.warc import documents_from_wet
 
-    texts = {
-        "https://a.test/art1": "the quick brown fox\njumps over it",
-        "https://b.test/art2": "纯文本 extracted content",
+    payloads = {
+        "https://a.test/art1": b"the quick brown fox\njumps over it",
+        "https://b.test/art2": "纯文本 extracted content".encode(),
+        # invalid UTF-8 (lone continuation, truncated sequence, overlong,
+        # surrogate) fails per record: U+FFFD, not a failed job
+        "https://c.test/art3": b"caf\xe9 \xff\xfe \xc0\xaf \xed\xa0\x80 ok \xe4\xb8",
     }
     members = [
         _record(
@@ -293,10 +296,8 @@ def test_documents_from_wet(spark, tmp_path):
             content_type="application/warc-fields",
         )
     ]
-    for url, t in texts.items():
-        members.append(
-            _record("conversion", url, t.encode(), content_type="text/plain")
-        )
+    for url, p in payloads.items():
+        members.append(_record("conversion", url, p, content_type="text/plain"))
     # a response record in the same archive must NOT become a document
     members.append(_record("response", "https://a.test/page", HTTP_PAYLOAD))
     (tmp_path / "part.warc.wet.gz").write_bytes(
@@ -305,9 +306,10 @@ def test_documents_from_wet(spark, tmp_path):
 
     docs = documents_from_wet(spark, str(tmp_path))
     rows = {r.url: r for r in docs.collect()}
-    assert set(rows) == set(texts)
-    for url, t in texts.items():
+    assert set(rows) == set(payloads)
+    for url, p in payloads.items():
         r = rows[url]
+        t = p.decode("utf-8", errors="replace")
         assert r.text == t
         assert r.n_chars == len(t)
         assert r.lang == "und"
